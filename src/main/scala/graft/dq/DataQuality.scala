@@ -1,7 +1,8 @@
 package graft.dq
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.io.Tables
 
@@ -18,10 +19,16 @@ import graft.io.Tables
   * exception, and NULLs violate uniqueness iff a NULL group has count > 1
   * (GROUP BY keeps one NULL group — pinned, documented, oracle-matched).
   *
-  * Scale notes: `required_columns` is pure schema metadata (zero scan);
-  * `min_row_count` and `unique_column` each compile to one aggregate over a
-  * pruned scan — on 100 TB these are a count-star (metadata-assisted for
-  * parquet) and one shuffle on the checked column.
+  * Scale notes: `runAll` compiles the checks, then executes them in as few
+  * actions as the check set allows (Deequ's shared-scan analyzers).
+  * `required_columns` and `source_exists` are metadata (zero scan).
+  * `min_row_count`, `null_ratio`, `value_range` and `freshness` become
+  * aggregate columns of ONE shared pass over a pruned scan. With a
+  * `unique_column` check they fold into its grouped pass — partials per
+  * key group, one outer aggregate that also counts the keys seen more than
+  * once — so the whole suite is one shuffle on the first unique key; with
+  * none they are one plain aggregate. Each further `unique_column` key and
+  * each `fk_integrity` check (a left-anti join) is one action of its own.
   */
 sealed trait Check
 final case class MinRowCount(threshold: Long) extends Check
@@ -57,89 +64,158 @@ final case class CheckResult(checkName: String, passed: Boolean, detail: String)
 
 object DataQuality {
 
-  /** Compile one check against a DataFrame into a (passed, detail) pair.
-    * Aggregations execute distributed; only the scalar verdict is collected.
+  /** One statistic of the shared pass: `partial` aggregates a key group (or
+    * the whole frame when there is no key), `merge` folds the partials.
     */
-  def evaluate(df: DataFrame, check: Check): Option[CheckResult] = check match {
+  private final case class Stat(partial: Column, merge: Column => Column)
+
+  private def summed(partial: Column) = Stat(partial, p => coalesce(sum(p), lit(0L)))
+  private val Rows = summed(count(lit(1)))
+
+  /** A check compiled against one frame. */
+  private sealed trait Step
+  /** Known from the schema or the file system alone; None is a skipped check. */
+  private final case class Known(result: Option[CheckResult]) extends Step
+  /** Reads its statistics' values from the shared pass. */
+  private final case class Shared(stats: Seq[Stat], finish: Seq[Any] => CheckResult) extends Step
+  /** The duplicate-key count of the shared pass's key column. */
+  private case object KeyDups extends Step
+  /** Needs an action of its own. */
+  private final case class Alone(run: () => CheckResult) extends Step
+
+  private def absent(name: String, column: String) =
+    Known(Some(CheckResult(name, passed = false, s"column $column absent")))
+
+  /** One action grouped by `key`: the count of keys seen more than once,
+    * then `merged` over the per-group `partials`. The aggregates output only
+    * these `__dq_` columns, so no column name the data brings can collide
+    * with them and throw mid-suite.
+    */
+  private def keyedPass(df: DataFrame, key: String, partials: Seq[Column],
+      merged: Seq[Column]): Row =
+    df.groupBy(col(key).as("__dq_key"))
+      .agg(count(lit(1)).as("__dq_cnt"), partials: _*)
+      .agg(count_if(col("__dq_cnt") > 1), merged: _*).head()
+
+  private def uniqueResult(dups: Long) =
+    CheckResult("unique_column", dups == 0, s"dup_keys=$dups")
+
+  private def compile(df: DataFrame, check: Check, key: Option[String]): Step = check match {
     case MinRowCount(threshold) =>
-      val n = df.count()
-      Some(CheckResult("min_row_count", n >= threshold,
-        s"observed=$n threshold=$threshold"))
+      Shared(Seq(Rows), v => {
+        val n = v.head.asInstanceOf[Long]
+        CheckResult("min_row_count", n >= threshold, s"observed=$n threshold=$threshold")
+      })
     case RequiredColumns(columns) =>
       val missing = columns.filterNot(df.columns.toSet)
-      Some(CheckResult("required_columns", missing.isEmpty,
-        if (missing.isEmpty) "all present" else s"missing=${missing.mkString(",")}"))
+      Known(Some(CheckResult("required_columns", missing.isEmpty,
+        if (missing.isEmpty) "all present" else s"missing=${missing.mkString(",")}")))
     case UniqueColumn(column) =>
-      if (!df.columns.contains(column))
-        Some(CheckResult("unique_column", passed = false, s"column $column absent"))
-      else {
-        // project the checked column to a fresh name FIRST: whatever the
-        // user's column is called ("count", "__cnt", ...), the grouped frame
-        // has exactly one column before the aggregate, so no name the data
-        // brings can collide with the count alias and throw mid-suite.
-        val dups = df.select(col(column).as("__dq_key"))
-          .groupBy(col("__dq_key")).agg(count(lit(1)).as("__dq_cnt"))
-          .filter(col("__dq_cnt") > 1).count()
-        Some(CheckResult("unique_column", dups == 0, s"dup_keys=$dups"))
-      }
+      if (!df.columns.contains(column)) absent("unique_column", column)
+      else if (key.contains(column)) KeyDups
+      else Alone(() => uniqueResult(keyedPass(df, column, Nil, Nil).getLong(0)))
     case SourceExists(path) =>
       val exists = pathExists(df.sparkSession, path)
-      Some(CheckResult("source_exists", exists,
-        if (exists) s"$path present" else s"$path missing"))
+      Known(Some(CheckResult("source_exists", exists,
+        if (exists) s"$path present" else s"$path missing")))
     case NullRatio(column, num, den) =>
-      if (!df.columns.contains(column))
-        Some(CheckResult("null_ratio", passed = false, s"column $column absent"))
-      else {
-        val row = df.agg(count(lit(1)).as("n"), count(col(column)).as("nn")).head()
-        val (n, nulls) = (row.getLong(0), row.getLong(0) - row.getLong(1))
-        Some(CheckResult("null_ratio", nulls * den <= num * n,
-          s"nulls=$nulls rows=$n max=$num/$den"))
-      }
+      if (!df.columns.contains(column)) absent("null_ratio", column)
+      else Shared(Seq(Rows, summed(count(col(column)))), v => {
+        val (n, nulls) = (v(0).asInstanceOf[Long], v(0).asInstanceOf[Long] - v(1).asInstanceOf[Long])
+        CheckResult("null_ratio", nulls * den <= num * n, s"nulls=$nulls rows=$n max=$num/$den")
+      })
     case ValueRange(column, lo, hi) =>
-      if (!df.columns.contains(column))
-        Some(CheckResult("value_range", passed = false, s"column $column absent"))
-      else if (!df.schema(column).dataType
-          .isInstanceOf[org.apache.spark.sql.types.NumericType])
+      if (!df.columns.contains(column)) absent("value_range", column)
+      else if (!df.schema(column).dataType.isInstanceOf[NumericType])
         // guard the type up front: under ANSI mode a numeric comparison on a
         // string column throws at the first non-numeric value, which would
         // abort the whole no-throw check suite mid-run.
-        Some(CheckResult("value_range", passed = false,
-          s"column $column not numeric (${df.schema(column).dataType.simpleString})"))
-      else {
-        val bad = df.filter(col(column) < lo || col(column) > hi).count()
-        Some(CheckResult("value_range", bad == 0, s"violations=$bad range=[$lo,$hi]"))
-      }
+        Known(Some(CheckResult("value_range", passed = false,
+          s"column $column not numeric (${df.schema(column).dataType.simpleString})")))
+      else Shared(Seq(summed(count_if(col(column) < lo || col(column) > hi))), v => {
+        val bad = v.head.asInstanceOf[Long]
+        CheckResult("value_range", bad == 0, s"violations=$bad range=[$lo,$hi]")
+      })
     case FkIntegrity(column, parent, parentColumn) =>
-      if (!df.columns.contains(column))
-        Some(CheckResult("fk_integrity", passed = false, s"column $column absent"))
+      if (!df.columns.contains(column)) absent("fk_integrity", column)
       else if (!parent.columns.contains(parentColumn))
         // same no-throw contract as the child side: a misspelled parent
         // column is a failed check, not an AnalysisException that aborts
         // the whole suite mid-run.
-        Some(CheckResult("fk_integrity", passed = false,
-          s"parent column $parentColumn absent"))
-      else {
+        Known(Some(CheckResult("fk_integrity", passed = false,
+          s"parent column $parentColumn absent")))
+      else Alone { () =>
         val orphans = df.filter(col(column).isNotNull).select(col(column))
           .join(parent.select(parent(parentColumn).as(column)), Seq(column), "left_anti")
           .count()
-        Some(CheckResult("fk_integrity", orphans == 0, s"orphans=$orphans"))
+        CheckResult("fk_integrity", orphans == 0, s"orphans=$orphans")
       }
     case Freshness(column, asOf, maxAgeDays) =>
-      if (!df.columns.contains(column))
-        Some(CheckResult("freshness", passed = false, s"column $column absent"))
-      else {
-        // one pruned max() — the newest watermark is the only scalar needed
-        val newest = df.agg(max(to_date(col(column))).as("newest")).head().getDate(0)
-        val cutoff = java.sql.Date.valueOf(asOf.toLocalDate.minusDays(maxAgeDays.toLong))
-        val passed = newest != null && !newest.before(cutoff)
-        Some(CheckResult("freshness", passed,
-          s"newest=$newest cutoff=$cutoff as_of=$asOf max_age_days=$maxAgeDays"))
+      if (!df.columns.contains(column)) absent("freshness", column)
+      else df.schema(column).dataType match {
+        case _: StringType | DateType | TimestampType | TimestampNTZType =>
+          // try_to_date: one malformed timestamp string counts as absent
+          // instead of throwing under ANSI and taking the pass down with it
+          Shared(Seq(Stat(max(try_to_date(col(column))), max(_))), v => {
+            val newest = v.head.asInstanceOf[java.sql.Date]
+            val cutoff = java.sql.Date.valueOf(asOf.toLocalDate.minusDays(maxAgeDays.toLong))
+            val passed = newest != null && !newest.before(cutoff)
+            CheckResult("freshness", passed,
+              s"newest=$newest cutoff=$cutoff as_of=$asOf max_age_days=$maxAgeDays")
+          })
+        case t => Known(Some(CheckResult("freshness", passed = false,
+          s"column $column not a date or timestamp (${t.simpleString})")))
       }
     case UnknownCheck(t) =>
       // Reference behavior: warn + skip, never fail (data_quality_operator.py:116-117).
       System.err.println(s"[dq] unknown check type '$t' — skipped")
-      None
+      Known(None)
   }
+
+  /** Compiles the checks, then runs every statistic they need, and the row
+    * count when `countRows`, in ONE action (see the scale notes above).
+    * Results keep spec order; skipped checks yield none.
+    */
+  private def execute(df: DataFrame, checks: Seq[Check], countRows: Boolean)
+      : (Seq[CheckResult], Option[Long]) = {
+    val key = checks.collectFirst { case UniqueColumn(c) if df.columns.contains(c) => c }
+    val steps = checks.map(compile(df, _, key))
+    val stats = (if (countRows) Seq(Rows) else Nil) ++
+      steps.flatMap { case Shared(s, _) => s; case _ => Nil }
+    val partials = stats.zipWithIndex.map { case (s, i) => s.partial.as(s"__dq_$i") }
+    val merged = stats.zipWithIndex.map { case (s, i) => s.merge(col(s"__dq_$i")) }
+    val (dups, values) = key match {
+      case Some(k) =>
+        val row = keyedPass(df, k, partials, merged)
+        (row.getLong(0), row.toSeq.tail)
+      case None if partials.nonEmpty =>
+        (0L, df.agg(partials.head, partials.tail: _*).head().toSeq)
+      case None => (0L, Nil)
+    }
+    val value = values.iterator
+    val rows = if (countRows) Some(value.next().asInstanceOf[Long]) else None
+    val results = steps.flatMap {
+      case Known(r) => r
+      case Shared(s, finish) => Some(finish(Seq.fill(s.size)(value.next())))
+      case KeyDups => Some(uniqueResult(dups))
+      case Alone(run) => Some(run())
+    }
+    (results, rows)
+  }
+
+  /** Run all checks; failures accumulate in spec order, nothing short-circuits. */
+  def runAll(df: DataFrame, checks: Seq[Check]): Seq[CheckResult] =
+    execute(df, checks, countRows = false)._1
+
+  /** [[runAll]] plus `df`'s row count, counted in the checks' shared pass. */
+  def runAllCounted(df: DataFrame, checks: Seq[Check]): (Seq[CheckResult], Long) = {
+    val (results, rows) = execute(df, checks, countRows = true)
+    (results, rows.get)
+  }
+
+  /** One check on its own; None when it is skipped. */
+  def evaluate(df: DataFrame, check: Check): Option[CheckResult] =
+    runAll(df, Seq(check)).headOption
 
   /** Path existence via the Hadoop FS API (works for any supported scheme —
     * the direct analogue of the reference's `check_for_key`).
@@ -148,10 +224,6 @@ object DataQuality {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
-
-  /** Run all checks; failures accumulate in spec order, nothing short-circuits. */
-  def runAll(df: DataFrame, checks: Seq[Check]): Seq[CheckResult] =
-    checks.flatMap(evaluate(df, _))
 
   /** Overall verdict — a value, not an exception (SURVEY.md §7.4 decision 6). */
   def verdict(results: Seq[CheckResult]): Boolean = results.forall(_.passed)

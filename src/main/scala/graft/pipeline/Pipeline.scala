@@ -2,8 +2,7 @@ package graft.pipeline
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.dq.{CheckResult, DataQuality}
 import graft.io.Ingest
@@ -165,19 +164,22 @@ object Pipeline {
       else {
         Ingest.writeRawZone(ingested, root, ds)
         // 3. Read back the written partition (the DQ operator re-reads from
-        //    the raw zone, data_quality_operator.py:63-69) — partition
-        //    pruning makes this a single-partition scan.
-        (spark.read.parquet(root).filter(col("ds") === ds).drop("ds"), true)
+        //    the raw zone, data_quality_operator.py:63-69) with the schema
+        //    just written, so no job infers it from parquet footers. A
+        //    zero-ROW ingest writes no partition directory: no rows to check.
+        val (partition, schema) = (s"$root/ds=$ds", ingested.drop("ds").schema)
+        (if (DataQuality.pathExists(spark, partition)) spark.read.schema(schema).parquet(partition)
+         else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema), true)
       }
 
-    // 4–5. Checks + verdict (run ALL, spec order; verdict is a value).
-    //    source_exists paths are {{ ds }}-templated like the reference's
-    //    check_for_key key.
+    // 4–5. Checks + verdict (run ALL, spec order; verdict is a value), in
+    //    one shared scan that also counts the run's rows. source_exists
+    //    paths are {{ ds }}-templated like the reference's check_for_key key.
     val renderedChecks = spec.checks.map {
       case graft.dq.SourceExists(p) => graft.dq.SourceExists(PipelineSpec.renderDs(p, ds))
       case c => c
     }
-    val results = DataQuality.runAll(readBack, renderedChecks)
+    val (results, rows) = DataQuality.runAllCounted(readBack, renderedChecks)
     val passed = DataQuality.verdict(results)
 
     // 6. Branch: alert on failure, no-op on success (O9–O11).
@@ -185,7 +187,7 @@ object Pipeline {
       alertSink.alert(spec.info.name, results.filterNot(_.passed).map(r =>
         s"${r.checkName}: ${r.detail}"))
 
-    PipelineResult(passed, results, if (written) root else "", readBack.count())
+    PipelineResult(passed, results, if (written) root else "", rows)
   }
 
   /** Backfill — the Airflow operation the reference's users actually run:

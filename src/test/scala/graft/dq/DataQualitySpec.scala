@@ -110,6 +110,26 @@ class DataQualitySpec extends SparkSpec {
     assert(!DataQuality.evaluate(nulls, Freshness("ts", asOf, 7)).get.passed)
   }
 
+  test("freshness under ANSI: a malformed timestamp counts as absent, never throws") {
+    val asOf = java.sql.Date.valueOf("2024-02-04")
+    val df = Seq("2024-01-28 10:00:00", "not a time", "2024-01-15").toDF("ts")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      assert(DataQuality.runAll(df, Seq(MinRowCount(3), Freshness("ts", asOf, 7))) == Seq(
+        CheckResult("min_row_count", passed = true, "observed=3 threshold=3"),
+        CheckResult("freshness", passed = true,
+          "newest=2024-01-28 cutoff=2024-01-28 as_of=2024-02-04 max_age_days=7")))
+      val junk = Seq("never", "nope").toDF("ts")
+      assert(DataQuality.evaluate(junk, Freshness("ts", asOf, 7)).get ==
+        CheckResult("freshness", passed = false,
+          "newest=null cutoff=2024-01-28 as_of=2024-02-04 max_age_days=7"))
+      // a column that cannot hold a date fails as a check, like a mistyped value_range
+      assert(DataQuality.evaluate(Seq(1L).toDF("ts"), Freshness("ts", asOf, 7)).get ==
+        CheckResult("freshness", passed = false, "column ts not a date or timestamp (bigint)"))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("failures accumulate in spec order; verdict is a value, not a throw") {
     val results = DataQuality.runAll(users,
       Seq(MinRowCount(99), RequiredColumns(Seq("zip")), UniqueColumn("id")))

@@ -67,6 +67,21 @@ class PipelineRunSpec extends SparkSpec {
     assert(r.results.map(_.checkName) == Seq("min_row_count"))
   }
 
+  test("a zero-row ingest writes no partition and fails min_row_count, not the run") {
+    import graft.dq._
+    val dir = tmp()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/empty.csv"), "id,name\n")
+    val s = PipelineSpec(PipelineInfo("p0", "o", "@daily", Nil, ""),
+      FileSource("csv", s"$dir/empty.csv", Map("header" -> "true")),
+      RawZoneDest(dir, "raw/users"), Seq(MinRowCount(1), RequiredColumns(Seq("id", "name"))))
+    val r = Pipeline.run(spark, s, LocalDate.parse("2024-05-01"),
+      new StubFetcher(""), new RecordingAlerts)
+    assert(!r.passed && r.rows == 0)
+    assert(r.results == Seq(
+      CheckResult("min_row_count", passed = false, "observed=0 threshold=1"),
+      CheckResult("required_columns", passed = true, "all present")))
+  }
+
   test("rerun of the same ds overwrites that partition only") {
     import graft.dq._
     val bucket = tmp()
