@@ -1,692 +1,243 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — one JSON line of per-query wall times at the env SF,
   * plus a machine-readable per-query artifact (`bench.json`) so the numbers
-  * survive stdout truncation and are cross-checkable round-over-round.
+  * survive stdout truncation and are cross-checkable run over run.
+  *
+  * One protocol for every query: one untimed warm-up run (Janino/JIT
+  * compilation of the query's generated code, a cost a steady-state
+  * deployment amortizes away), then [[TimedRuns]] timed runs. The headline
+  * `secs` is the median of the timed runs; `min`, `spread` and every raw run
+  * sit beside it in the artifact. No timed run is ever excluded, and a query
+  * any of whose runs throws is reported failed and poisons the total (-1).
   *
   * Each query executes via a `noop`-format write so every output column is
   * actually computed (a bare `count()` would let Spark prune the projections
-  * and under-report map-heavy queries). A generic warmup job boots the
-  * executor pool, codegen and the parquet reader before the first measurement
-  * so query #1 doesn't absorb JVM startup.
+  * and under-report map-heavy queries).
+  *
+  * Env: `SPARK_GRAFT_SF_DIR` (fixture dir), `SPARK_GRAFT_CPUS` (local[n],
+  * default: the host's processors), `SPARK_GRAFT_BENCH_OUT` (artifact path,
+  * default `bench.json`), `SPARK_GRAFT_BENCH_BASELINE` (artifact to compare
+  * against, default the previous `SPARK_GRAFT_BENCH_OUT`). Optional arg: a
+  * comma-separated query-name filter.
   */
 object Bench {
 
-  /** Queries with a documented >1 s run-to-run swing (docs/BENCH_NOTES.md
-    * #23/#24/#26: iterative graph queries whose per-round driver round-trips
-    * and checkpoint storage make them hostage to heap pressure). These get
-    * MEDIAN-OF-3 instead of best-of-2: a median is a defensible central
-    * tendency where a single-run number (the round-4 x_pagerank 10.1 s vs
-    * round-3 5.98 s confusion) is noise wearing a number's clothes.
-    */
-  val NoisyQueries: Set[String] = Set(
-    "x_pagerank", "x_triangles", "x_bfs_dist",
-    "x_dedup_cluster", "x_dedup_cluster_verified", "x_cc_size_dist",
-    "x_jaccard_join", "x_quality_filter",
-    // Round 14: the three-round x_lsh_precision watch item resolved into
-    // a measurement-policy fact, not drift — same-code readings spanned
-    // 1.26-4.29 s across four same-night passes (docs/BENCH_NOTES.md
-    // #85). Its wall is dominated by the eager ckptDisk pairs build
-    // inside the measured window, exactly like the rest of the jaccard/
-    // checkpoint family ALREADY in this set — and its old min2 stat
-    // never probed (the 2.58 s baseline put the slow-probe threshold at
-    // 5.15 s). median3 + warmup + the early tier's per-run dual-channel
-    // probes give it the same treatment as its family.
-    "x_lsh_precision")
-  // NOT in the set despite first-run compile cost: x_rand_walk,
-  // x_shortest_path, x_basket_pairs, x_rfm, x_kcore. Measured (round 8):
-  // their swing is concentrated in run 1 (Janino compile, e.g. x_rand_walk
-  // 10.6 s then 3.8 s), which min-of-2 already discards exactly like every
-  // other query; promoting them to warmup+median3 was tried and REPORTED
-  // WORSE numbers (median 5.3 s vs min 3.8 s for x_rand_walk) because
-  // their steady-state runs still vary ±1 s and a median keeps that noise
-  // where a min discards it along with the compile. Round 9 instead gives
-  // the whole iterative tier (the `early` seq) ONE untimed warmup run
-  // while KEEPING min-of-2 for the non-noisy members — the warmup absorbs
-  // compile + any residual cold state without letting steady-state noise
-  // into the reported stat (the round-8 driver suite still measured
-  // x_rand_walk at 15.3 s on its SECOND run while the same commit ran
-  // 3.4 s isolated; a min over two post-warmup runs is the defensible
-  // number either way, and the warmup seconds stay visible in the
-  // artifact).
+  val TimedRuns = 3
 
-  /** One measured execution: wall seconds plus the window's GC/JIT deltas,
-    * the longest task, the task count/sum (uniform-slowdown channel), the
-    * mini-probe readings taken just outside the window (-1 = not probed),
-    * and (round 14) the memory-bandwidth readings taken alongside them —
-    * the md5 minis cannot see the ~1.2–2× bandwidth-contention regime
-    * (BENCH_NOTES #77), so the early tier's runs carry both channels.
-    * Round 15 graduates the per-run mem channel from observational to
-    * GATING inside [[suspectRun]] (round-14 verdict #1): a run probed
-    * mem-hot AND measured slow is excluded from the chosen stat exactly
-    * like a probe-hot run — the r14 32-core driver pass certified itself
-    * `probe_mem: clean` at its 3 pass-level sample points while ~8
-    * unflagged queries carried 1.4–2.6× contention readings taken at
-    * their own runs. secs < 0 marks a failed run.
+  /** A caller may keep only a bounded tail of stdout, so the summary line is
+    * held to this many chars; full per-query fidelity lives in the artifact.
+    */
+  val LineBudget = 1600
+
+  /** One execution: wall seconds plus observational channels over the same
+    * window — JVM GC and JIT time, the longest task, task count and summed
+    * task time (one straggler vs a uniform stretch). None of them gates.
     */
   case class Run(secs: Double, gcMs: Long, jitMs: Long, maxTaskMs: Long,
-      tasks: Long, taskSumMs: Long, probeBeforeMs: Long, probeAfterMs: Long,
-      memBeforeMs: Long = -1L, memAfterMs: Long = -1L)
+      tasks: Long, taskSumMs: Long)
 
-  /** Per-run throttle attribution (BENCH_NOTES #76): a run is SUSPECT —
-    * likely measured through a host throttle burst rather than its plan —
-    * when either channel fires:
-    *  - probe-hot AND the run itself came out slow: a probe reading taken
-    *    just outside the run's window exceeds its tolerance (direct
-    *    speed-of-light evidence) on EITHER channel — the md5 mini (the
-    *    3-10× CPU-burst regime) or, since round 15, the mem stream (the
-    *    1.2-2× bandwidth regime, round-14 verdict #1: the r14 driver pass
-    *    read pass-level mem-clean while unflagged queries carried 1.4-2.6×
-    *    run-level mem-hot readings; both channels ride every early-tier
-    *    run since round 14, so the calibration data asked for then now
-    *    exists — see BENCH_NOTES #88 for the band evidence). A FAST run
-    *    next to a jittery probe evidently wasn't throttled, and excluding
-    *    it would discard the best sample and bias the min-tier headline
-    *    upward (round-13 ADVICE). "Slow" = ≥1.5× the prior-round baseline
-    *    when one exists, else ≥1.5× the fastest sibling run in this
-    *    sample; with neither reference the probe keeps its original
-    *    unconditional authority (conservative: no evidence the run was
-    *    fast);
-    *  - heuristic: the round-12 burst signature — every task uniformly
-    *    slow (max_task within 1.6x of the MEAN task, so no straggler to
-    *    blame), task work DOMINATING the window (summed task time >= the
-    *    wall, i.e. at least one core-equivalent busy — a driver-side-
-    *    dominated slow query has tiny task sums and must stay eligible
-    *    for gt2x as a real regression), flat GC+JIT (< 20% of wall — not
-    *    a pause or compile storm), and wall >= 2x this query's baseline.
-    *    Gated on >= 8 tasks and >= 1 s wall so micro-query noise can't
-    *    trip it. (The r12 burst run: 246.4 s of task time in a 21.7 s
-    *    window — the executor fleet was busy AND uniformly slow.)
-    * Pure so the classification itself is spec-pinned, not just exercised.
+  /** One query's runs that completed, in order; a run that threw ends the
+    * query, so anything short of a warm-up plus [[TimedRuns]] is a failure.
     */
-  def suspectRun(r: Run, baselineSecs: Option[Double],
-      fastestSiblingSecs: Option[Double] = None): Boolean = {
-    val probeHot = graft.util.CpuProbe.miniHot(r.probeBeforeMs) ||
-      graft.util.CpuProbe.miniHot(r.probeAfterMs) ||
-      graft.util.CpuProbe.memHot(r.memBeforeMs) ||
-      graft.util.CpuProbe.memHot(r.memAfterMs)
-    // forall: with no baseline AND no sibling the probe's verdict stands
-    // unconditioned, as before round 14.
-    val runSlow = baselineSecs.filter(_ > 0.0)
-      .orElse(fastestSiblingSecs.filter(_ > 0.0))
-      .forall(ref => r.secs >= 1.5 * ref)
-    val wallMs = r.secs * 1000.0
-    val heuristic = r.tasks >= 8 && r.secs >= 1.0 &&
-      r.maxTaskMs <= 1.6 * (r.taskSumMs.toDouble / r.tasks) &&
-      r.taskSumMs >= wallMs &&
-      (r.gcMs + r.jitMs) < 0.2 * wallMs &&
-      baselineSecs.exists(b => b > 0.0 && r.secs >= 2.0 * b)
-    r.secs >= 0 && ((probeHot && runSlow) || heuristic)
+  case class Result(name: String, warmup: Option[Run], runs: Seq[Run]) {
+    val failed: Boolean = warmup.isEmpty || runs.size < TimedRuns
+    private val ts = runs.map(_.secs).sorted
+    /** The median: [[TimedRuns]] is odd. */
+    def secs: Double = if (failed) -1.0 else ts(ts.size / 2)
+    def min: Double = if (failed) -1.0 else ts.head
+    def spread: Double = if (failed) -1.0 else ts.last - ts.head
   }
 
-  /** Should a >2x-vs-baseline entry be diverted to `gt2x_regime` — named as
-    * bandwidth-regime fallout rather than a plan regression? Two evidence
-    * tiers (round 14; the second added after this round's first pass became
-    * the worked example one level down from r13's):
-    *  - pass-level: the pass's 3-point mem verdict is not clean and the
-    *    ratio is under 3x (the uniform 1.2-2x regime can't produce more);
-    *  - per-query: ANY of this query's own runs carried a hot mem reading
-    *    (the regime was measured AT this query's point in the pass). No
-    *    ratio ceiling here: the 3-point pass probe demonstrably misses an
-    *    INTERMITTENT regime (this round's first pass: pass readings 83-95
-    *    ms = clean, while all ten gt2x victims' run-level readings sat at
-    *    151-410 ms with cool md5 minis and untouched query code — and on
-    *    sub-second queries the regime's ~0.5-1 s absolute tax produces
-    *    3-4.5x ratios, past any uniform-inflation ceiling). Exclusion is
-    *    the wrong tool for a uniform regime — there may be no clean
-    *    sibling to fall back to (the faster run can be the mem-hot one) —
-    *    so the entry is DIVERTED, fully visible, for the next clean pass
-    *    to re-adjudicate.
-    * Pure so the gate is spec-pinned (BenchTriageSpec).
+  /** Suite total; a failed query must poison it, or a broken suite would
+    * bench faster than a working one for any consumer reading only `value`.
     */
-  def regimeDivert(passMemVerdict: String, ratio: Double,
-      queryMemHot: Boolean): Boolean =
-    (passMemVerdict != "clean" && ratio < 3.0) || queryMemHot
+  def total(rs: Seq[Result]): Double =
+    if (rs.exists(_.failed)) -1.0 else rs.map(_.secs).sum
 
-  /** The chosen central tendency over a (possibly suspect-filtered) sample:
-    * min for the default tier, median for [[NoisyQueries]] — even-sized
-    * samples (a suspect run excluded from a 3-run sample) take the
-    * midpoint of the two middle values. Empty sample = failed (-1).
+  def fmt(d: Double): String =
+    BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  private def quote(s: String): String = "\"" + s + "\""
+  private def list(xs: Seq[String]): String = xs.map(quote).mkString("[", ",", "]")
+
+  private val SfRe = """"sf":\s*"([^"]+)"""".r
+  private val SecsRe = """"([A-Za-z0-9_]+)":\s*\{"secs":(-?[0-9.]+)""".r
+
+  /** An artifact's sf and per-query `secs`. The format is ours (written by
+    * [[artifact]]), so a regex is parse enough — no JSON lib on the classpath.
     */
-  def chooseStat(noisy: Boolean, ts: Seq[Double]): Double =
-    if (ts.isEmpty) -1.0
-    else if (noisy) {
-      val s = ts.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    } else ts.min
+  def readBaseline(txt: String): (Option[String], Map[String, Double]) =
+    (SfRe.findFirstMatchIn(txt).map(_.group(1)),
+      SecsRe.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap)
+
+  /** Ratio summary against a previous artifact: median and p90 of per-query
+    * current/baseline, and `gt2x` naming every query above 2x. A baseline
+    * at another sf is a unit error, not a regression: its ratios are
+    * suppressed and the mismatch recorded.
+    */
+  def vsBaseline(rs: Seq[Result], sfDir: String, file: String, txt: String): String = {
+    val (sf, base) = readBaseline(txt)
+    lazy val ratios = rs.flatMap(r => base.get(r.name).filter(_ > 0.0)
+      .collect { case b if r.secs > 0.0 => r.name -> r.secs / b }).sortBy(_._2)
+    if (sf.exists(_ != sfDir))
+      s"""{"file":"$file","sf_mismatch":true,"baseline_sf":"${sf.get}"}"""
+    else if (ratios.isEmpty) "null"
+    else {
+      val med = ratios(ratios.size / 2)._2
+      val p90 = ratios(math.min(ratios.size * 9 / 10, ratios.size - 1))._2
+      s"""{"file":"$file","n":${ratios.size},"median_ratio":${fmt(med)},""" +
+        s""""p90_ratio":${fmt(p90)},"gt2x":${list(ratios.filter(_._2 > 2.0).map(_._1))}}"""
+    }
+  }
+
+  def artifact(rs: Seq[Result], sfDir: String, vs: String): String = {
+    def arr(f: Run => Any, r: Result) = r.runs.map(f).mkString("[", ",", "]")
+    val queries = rs.map { r =>
+      s"""  "${r.name}": {"secs":${fmt(r.secs)},"min":${fmt(r.min)},""" +
+        s""""spread":${fmt(r.spread)},"runs":${arr(x => fmt(x.secs), r)},""" +
+        s""""warmup":${fmt(r.warmup.fold(-1.0)(_.secs))},""" +
+        s""""gc_ms":${arr(_.gcMs, r)},"jit_ms":${arr(_.jitMs, r)},""" +
+        s""""max_task_ms":${arr(_.maxTaskMs, r)},"tasks":${arr(_.tasks, r)},""" +
+        s""""task_sum_ms":${arr(_.taskSumMs, r)}}"""
+    }.mkString("{\n", ",\n", "\n}")
+    s"""{
+       |"sf":"$sfDir",
+       |"unit":"sec",
+       |"protocol":{"warmup":1,"timed":$TimedRuns,"stat":"median"},
+       |"total":${fmt(total(rs))},
+       |"failed":${list(rs.filter(_.failed).map(_.name))},
+       |"vs_baseline":$vs,
+       |"queries":$queries
+       |}""".stripMargin
+  }
+
+  /** The one stdout line: failed names first, then queries most expensive
+    * first, each list cut to what fits [[LineBudget]]; `omitted` counts the
+    * query entries cut.
+    */
+  def summaryLine(rs: Seq[Result], sfDir: String, outFile: String): String = {
+    def line(qs: Seq[String], failed: Seq[String]) =
+      s"""{"metric":"total","value":${fmt(total(rs))},"unit":"sec","n":${rs.size},""" +
+        s""""omitted":${rs.size - qs.size},"queries":${qs.mkString("{", ",", "}")},""" +
+        s""""failed":${failed.mkString("[", ",", "]")},"artifact":"$outFile","sf":"$sfDir"}"""
+    def fit(items: Seq[String], budget: Int): Seq[String] =
+      items.zip(items.scanLeft(0)(_ + _.length + 1).tail)
+        .takeWhile(_._2 <= budget).map(_._1)
+    val failed = fit(rs.filter(_.failed).map(r => quote(r.name)),
+      LineBudget - line(Nil, Nil).length)
+    val qs = fit(rs.filterNot(_.failed).sortBy(-_.secs)
+      .map(r => quote(r.name) + ":" + fmt(r.secs)), LineBudget - line(Nil, failed).length)
+    line(qs, failed)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
-    // SPARK_GRAFT_BENCH_REPEAT=N (default 1): run the WHOLE suite N times in
-    // one JVM and write a per-query pass-over-pass delta artifact
-    // (`bench_stability.json`) alongside the primary one — the round-5
-    // builder-vs-driver confusion (same commit, 3.3 s vs 18.9 s x_triangles)
-    // is only diagnosable when drift is measured first-class, not inferred
-    // from two differently-warmed runs.
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "1").toInt
-    // Round-over-round reconciliation (round-11 verdict #4): per-query
-    // baselines come from the PREVIOUS committed artifact — by default this
-    // very outFile, read here BEFORE the run overwrites it, or an explicit
-    // SPARK_GRAFT_BENCH_BASELINE path. The new artifact then carries the
-    // ratio summary NEXT TO the probe readings, so "half the suite got
-    // slower" and "the host was throttled" are distinguishable inside one
-    // file instead of argued across rounds (BENCH_NOTES #66/#69).
     val explicitBaseline = sys.env.get("SPARK_GRAFT_BENCH_BASELINE")
-    explicitBaseline.filterNot(p =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(p))).foreach(p =>
-      // an EXPLICITLY requested baseline that doesn't exist must say so —
-      // silently recording vs_baseline:null would hide a typo'd path from
-      // the operator who asked for the comparison
-      System.err.println(s"[bench] WARNING: baseline '$p' not found; " +
-        "vs_baseline will be null"))
-    val baselinePath = explicitBaseline
-      .orElse(Some(outFile))
-      .filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-    // The baseline's own "sf" must match this run's — ratios of an sf0.01
-    // run against an sf0.1 artifact are not regressions, they're a unit
-    // error, and recording them as vs_baseline would commit bogus 10x
-    // ratios into the artifact (round-12 ADVICE). A mismatch keeps the
-    // path (so the artifact can SAY what was skipped) but empties the
-    // ratio inputs.
-    val baselineSf: Option[String] = baselinePath.flatMap { p =>
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      """"sf":\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
+    def exists(p: String) = Files.exists(Paths.get(p))
+    // an explicitly requested baseline that doesn't exist must say so, or a
+    // typo'd path would silently record vs_baseline:null
+    explicitBaseline.filterNot(exists).foreach(p =>
+      System.err.println(s"[bench] WARNING: baseline '$p' not found; vs_baseline will be null"))
+    // read BEFORE this run overwrites outFile
+    val baseline = explicitBaseline.orElse(Some(outFile)).filter(exists)
+      .map(p => p -> new String(Files.readAllBytes(Paths.get(p)), UTF_8))
+    baseline.foreach { case (p, txt) =>
+      readBaseline(txt)._1.filter(_ != sfDir).foreach(sf => System.err.println(
+        s"[bench] WARNING: baseline '$p' is at sf '$sf' but this run is at '$sfDir'; " +
+          "vs_baseline ratios suppressed (sf_mismatch recorded)"))
     }
-    val sfMismatch = baselineSf.exists(_ != sfDir)
-    if (sfMismatch)
-      System.err.println(s"[bench] WARNING: baseline '${baselinePath.get}' " +
-        s"is at sf '${baselineSf.get}' but this run is at '$sfDir'; " +
-        "vs_baseline ratios suppressed (sf_mismatch recorded)")
-    val baseline: Map[String, Double] = baselinePath.filter(_ => !sfMismatch)
-      .map { p =>
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
-          java.nio.charset.StandardCharsets.UTF_8)
-        // The artifact format is ours (written below) — a two-group regex
-        // over `"name": {"secs":N` is parse enough, no JSON lib on the
-        // classpath needed.
-        val re = """"([A-Za-z0-9_]+)":\s*\{"secs":(-?[0-9.]+)""".r
-        re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }.getOrElse(Map.empty)
+
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // Even with the UI off, SQLAppStatusListener retains up to 1000
-      // executions' full plan graphs + metric maps; across a 150-query
-      // suite that is real old-gen pressure inside later queries' measured
-      // windows (observed: x_pagerank 4.6 s isolated vs 8.2 s mid-suite).
+      // executions' plan graphs + metric maps: old-gen pressure inside later
+      // queries' windows across a 250-query suite.
       .config("spark.sql.ui.retainedExecutions", "1")
-      // The CodeGenerator class cache defaults to 100 entries against a
-      // 250-query suite x 2-3 runs each (~750 plan executions, far more
-      // distinct codegen units): every run past the first hundred evicts
-      // and Janino-recompiles inside the measured window, and the churned
-      // generated classes pile into the old gen until a full GC can unload
-      // them — the accumulation regime BENCH_NOTES #31 measured (pass-2
-      // x_pagerank 4.0 -> 13.1 s on IDENTICAL code) and the round-7 driver
-      // run hit as steady state. 5000 entries holds every generated class
-      // for the whole suite: compile once on the warmup/first run, hit
-      // cache forever after. Static conf — must be set before the session
-      // exists, which is why it lives here and not per-query.
+      // The default 100-entry codegen class cache would evict and
+      // Janino-recompile inside timed windows across ~1000 plan executions;
+      // 5000 holds every generated class for the suite (static conf).
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def exec(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    def exec(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-    // Per-run attribution channels (round-10 verdict: a 41 s driver run-1
-    // outlier was unexplainable from wall time alone). Three signals per
-    // measured run, all recorded in the artifact: JVM GC time inside the
-    // run's window, JIT compilation time inside the window (C2 promotion
-    // storms look like query time but aren't plan cost), and the longest
-    // single task (a straggler/spill shows up here; uniform slowness
-    // doesn't). None of these are free-running averages — they are deltas
-    // across exactly the measured window.
     import java.lang.management.ManagementFactory
+    import java.util.concurrent.atomic.AtomicLong
     import scala.jdk.CollectionConverters._
-    def gcMs(): Long =
-      ManagementFactory.getGarbageCollectorMXBeans.asScala
-        .map(b => math.max(0L, b.getCollectionTime)).sum
+    def gcMs(): Long = ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(b => math.max(0L, b.getCollectionTime)).sum
     val jitBean = ManagementFactory.getCompilationMXBean
     def jitMs(): Long =
       if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
         jitBean.getTotalCompilationTime else 0L
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // Task count + summed task time alongside the max: the ratio
-    // max_task / (total_task / tasks) distinguishes ONE straggler (high)
-    // from a fleet-wide uniform stretch (≈1) — the round-12 driver burst's
-    // signature was "all 32 intersection tasks uniformly ~7.7 s", which no
-    // single-channel max can tell apart from a genuinely heavier plan.
-    val taskCount = new java.util.concurrent.atomic.AtomicLong(0L)
-    val totalTaskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskInfo != null) {
-            // count LAST: the settle below polls the count, and a
-            // sub-millisecond task (common in local mode) moves the sum by
-            // 0 — settling on the sum could return with max/count updates
-            // still in flight (round-13 ADVICE). Every event moves the
-            // count by exactly 1, and by the time it does, its own
-            // max/sum updates are already published.
-            maxTaskMs.getAndAccumulate(t.taskInfo.duration, math.max)
-            totalTaskMs.addAndGet(t.taskInfo.duration)
-            taskCount.incrementAndGet()
-          }
-      })
-    // The listener bus is asynchronous: the straggler task this channel
-    // exists to catch is often the LAST event delivered, after the action
-    // has already returned — read-once would miss it or leak it into the
-    // next run's window. Settle-poll (graft.util.Poll, shared with the
-    // stress harness's listener), OUTSIDE the measured window; short
-    // cadence because this runs once per measured run. Settling on the
-    // COUNT settles the max and sum too (each event publishes those
-    // before its count increment — see the listener comment).
-    def settleTasks(): Unit = {
-      graft.util.Poll.settled(() => taskCount.get(), 20, 50); ()
-    }
+    val (maxTaskMs, taskCount, taskSumMs) = (new AtomicLong, new AtomicLong, new AtomicLong)
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (t.taskInfo != null) {
+          // count LAST: settling on the count then settles max and sum too
+          maxTaskMs.getAndAccumulate(t.taskInfo.duration, math.max)
+          taskSumMs.addAndGet(t.taskInfo.duration)
+          taskCount.incrementAndGet()
+        }
+    })
 
-
-    // Warmup: shuffle + agg + parquet scan machinery, not a declared query.
-    exec(spark.range(1000000).selectExpr("id % 97 AS k", "id AS v")
-      .groupBy("k").sum("v"))
-    // Warm EVERY fixture table with a full columnar read (noop write, so
-    // no column pruning): suite query #1 previously absorbed the cold
-    // first read of lineitem inside its measured window (round-8 driver
-    // run: x_rand_walk run 1 = 25.1 s vs 3.4 s isolated-with-warm-cache
-    // in the same environment). A steady-state deployment reads hot data;
-    // cold page-cache + parquet-footer I/O is a fixture artifact the
-    // measured window should exclude, once, here.
-    // Per-table try: warmup is best-effort — a missing/unreadable fixture
-    // table must fail ONLY its own queries (reported via the per-run
-    // try/catch as failed entries), not abort the run before any artifact
-    // is written.
+    // Generic warm-up (executor pool, codegen, shuffle), then every fixture
+    // table read in full once, so query #1 doesn't absorb JVM start-up and
+    // cold page-cache reads. Per-table try: a missing table fails only its
+    // own queries.
+    exec(spark.range(1000000).selectExpr("id % 97 AS k", "id AS v").groupBy("k").sum("v"))
     graft.io.Tables.names.foreach { t =>
       try exec(graft.io.Tables(spark, sfDir, t))
       catch { case scala.util.control.NonFatal(_) => () }
     }
 
-    // Run 1 pays Janino/JIT compilation of the query-specific generated
-    // code (a JVM artifact a steady-state deployment amortizes away); data
-    // is re-read from parquet every run. Best of 2 by default; median of 3
-    // for the NoisyQueries set. A query that throws is reported as -1 and
-    // named in "failed" — a broken query must never bench as
-    // fast-and-silent.
-    // Optional arg: comma-separated query names for fast perf iteration
-    // (the driver passes no args and benches the full surface).
+    def oneRun(name: String, fn: (SparkSession, String) => DataFrame): Option[Run] = {
+      // Outside the window: drop earlier runs' localCheckpoint blocks (the
+      // ContextCleaner frees them only after GC) so storage pressure can't
+      // bleed into this measurement.
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      System.gc()
+      val (gc0, jit0) = (gcMs(), jitMs())
+      maxTaskMs.set(0L); taskCount.set(0L); taskSumMs.set(0L)
+      val t0 = System.nanoTime()
+      try {
+        exec(fn(spark, sfDir))
+        val wall = (System.nanoTime() - t0) / 1e9
+        // the listener bus is asynchronous: let the last TaskEnds land
+        graft.util.Poll.settled(() => taskCount.get(), 20, 50)
+        Some(Run(wall, gcMs() - gc0, jitMs() - jit0, maxTaskMs.get(),
+          taskCount.get(), taskSumMs.get()))
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+          None
+      }
+    }
+
     val only = args.headOption.map(_.split(',').toSet)
-    // Iterative/graph tier FIRST, rest alphabetical. These queries hold
-    // checkpoint blocks and multi-stage generated classes; running them at
-    // the head of the suite measures them against a quiet heap instead of
-    // 200 queries' accumulated tenured garbage (the round-7 driver run
-    // measured the same code 3-6x slower mid-suite than the builder's
-    // dedicated runs — suite position, not plan, was the variable). The
-    // alphabetical rest is unaffected: cheap one-to-two-stage plans whose
-    // timings never showed position sensitivity.
-    val early = Seq(
-      "x_rand_walk", "x_pagerank", "x_shortest_path", "x_bfs_dist",
-      "x_triangles", "x_basket_pairs", "x_rfm", "x_kcore",
-      "x_dedup_cluster", "x_dedup_cluster_verified", "x_cc_size_dist",
-      "x_graph_jaccard", "x_jaccard_join", "x_quality_filter",
-      "x_lsh_precision")
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // The iterative tier gets one untimed warmup run (see NoisyQueries
-    // note); everything else relies on min-of-n discarding run 1.
-    def warmedUp(name: String): Boolean =
-      NoisyQueries(name) || early.contains(name)
-    val selected =
-      all.filter(q => early.contains(q._1))
-        .sortBy(q => early.indexOf(q._1)) ++
-      all.filterNot(q => early.contains(q._1))
-    // One full measurement pass over the suite. The stat label is derived
-    // from the SURVIVING run count (median2/min1/...), not the intended one,
-    // so a query that throws on some-but-not-all runs can never bench as a
-    // healthy "median3" — partial failures surface in the "flaky" list.
-    // Self-certification (docs/BENCH_NOTES.md #69/#70): a pure-CPU probe
-    // reading at pass start, middle, and end. A throttled host stretches
-    // task wall time fleet-wide with flat GC/JIT; without a speed-of-light
-    // reading INSIDE the artifact, such a pass is indistinguishable from a
-    // plan regression (the round-10/11 cross-round total confusion). The
-    // probe runs between queries — Spark is idle — so it reads the host,
-    // not the suite.
-    val probes = scala.collection.mutable.ArrayBuffer.empty[graft.util.CpuProbe.Reading]
-    def probe(label: String): Unit =
-      probes += graft.util.CpuProbe.read(label, graft.util.CpuProbe.RefThreads)
-
-    // Headline stats are computed over NON-suspect runs (see [[suspectRun]])
-    // when any exist; the full sample stays in the artifact (secs_all +
-    // per-run flags).
-
-    /** One query's pass result: chosen stat over clean runs, the all-runs
-      * stat for round-over-round comparability, every raw run + its
-      * suspect flag, and the untimed warmup if one ran.
-      */
-    case class QR(name: String, secs: Double, secsAll: Double, stat: String,
-        runs: Seq[Run], suspect: Seq[Boolean], nRuns: Int, warm: Option[Run])
-
-    def runPass(pass: Int): Seq[QR] = {
-      probe(s"p${pass}_start")
-      val mid = selected.size / 2
-      val out = selected.zipWithIndex.map { case ((name, fn), idx) =>
-        if (idx == mid && idx > 0) probe(s"p${pass}_mid")
-        val nRuns = if (NoisyQueries(name)) 3 else 2
-        // Mini-probe policy: the iterative/graph tier (the documented burst
-        // victims — every false "regression" in the round-12 driver
-        // artifact was one of these) gets a reading before AND after every
-        // measured run — since round 14 on BOTH channels (md5 mini for the
-        // 3-10x burst regime, mem stream for the 1.2-2x bandwidth regime;
-        // same ~100ms cost class each). Everything else gets after-readings
-        // only when the run came out slow (>= 2x baseline, or >= 2 s
-        // without one) — attribution on demand, ~0 cost on a clean pass.
-        // All probes sit OUTSIDE the measured window.
-        val probeRun = early.contains(name)
-        def oneRun(measured: Boolean): Option[Run] = {
-          // Before each run (outside the measured window): drop dead
-          // localCheckpoint blocks. Several queries pin lineage-truncation
-          // blocks in executor storage; the ContextCleaner frees them only
-          // after the owning RDD is GC'd, so prior runs' storage pressure
-          // bleeds into later measurements (observed: x_pagerank 5.4 s
-          // isolated vs 14.9 s mid-suite). Unpersist is deterministic where
-          // System.gc() is advisory; the gc still helps with non-storage heap.
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          System.gc()
-          val pb = if (measured && probeRun) graft.util.CpuProbe.miniMs()
-            else -1L
-          val mb = if (measured && probeRun)
-            graft.util.CpuProbe.memMs(graft.util.CpuProbe.RefThreads)
-            else -1L
-          val (gc0, jit0) = (gcMs(), jitMs())
-          maxTaskMs.set(0L); taskCount.set(0L); totalTaskMs.set(0L)
-          val t0 = System.nanoTime()
-          try {
-            exec(fn(spark, sfDir))
-            val wall = (System.nanoTime() - t0) / 1e9
-            settleTasks()
-            val slow = baseline.get(name).filter(_ > 0.0)
-              .map(b => wall >= 2.0 * b).getOrElse(wall >= 2.0)
-            val pa = if (measured && (probeRun || slow))
-              graft.util.CpuProbe.miniMs() else -1L
-            val ma = if (measured && (probeRun || slow))
-              graft.util.CpuProbe.memMs(graft.util.CpuProbe.RefThreads)
-              else -1L
-            Some(Run(wall, gcMs() - gc0, jitMs() - jit0, maxTaskMs.get(),
-              taskCount.get(), totalTaskMs.get(), pb, pa, mb, ma))
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-              None
-          }
-        }
-        // Noisy queries get ONE untimed warmup run (JMH-style) before the
-        // measured sample: their multi-stage iterative plans pay ~3-5 s of
-        // one-time Janino/JIT compilation on first execution, and with a
-        // 3-run median that compile run lands INSIDE the sample and
-        // dominates the reported spread (round-6 driver run: x_pagerank
-        // runs 9.5/5.5/4.7 — the 4.8 s spread is run 1's compile, not
-        // steady-state variance). The warmup seconds are RECORDED in the
-        // artifact ("warmup" field) so nothing is hidden; min-of-2 queries
-        // need none because min() already discards the compile run.
-        val warm =
-          if (warmedUp(name))
-            Some(oneRun(measured = false)
-              .getOrElse(Run(-1.0, 0, 0, 0, 0, 0, -1, -1)))
-          else None
-        val runs = (1 to nRuns).flatMap(_ => oneRun(measured = true))
-        // The probe-hot channel's "run also slow" reference (see
-        // [[suspectRun]]): prior-round baseline when one exists, else the
-        // fastest OTHER run of this sample.
-        val suspect = runs.map { r =>
-          val sib = runs.filter(o => !(o eq r)).map(_.secs).filter(_ >= 0)
-          suspectRun(r, baseline.get(name),
-            if (sib.isEmpty) None else Some(sib.min))
-        }
-        val clean = runs.zip(suspect).collect { case (r, false) => r }
-        // Chosen stat prefers the clean sample; if EVERY run is suspect the
-        // all-runs stat is reported with a "_suspect" stat suffix — a
-        // number must never silently pretend its sample was clean.
-        val useClean = clean.nonEmpty
-        val used = if (useClean) clean else runs
-        val secs = chooseStat(NoisyQueries(name), used.map(_.secs))
-        val secsAll = chooseStat(NoisyQueries(name), runs.map(_.secs))
-        val statBase =
-          if (used.isEmpty) "none"
-          else if (NoisyQueries(name)) s"median${used.size}"
-          else s"min${used.size}"
-        val stat =
-          if (runs.nonEmpty && !useClean) s"${statBase}_suspect" else statBase
-        QR(name, secs, secsAll, stat, runs, suspect, nRuns, warm)
-      }
-      probe(s"p${pass}_end")
-      out
-    }
-
-    val passes = (1 to repeat).map(runPass)
-    // The primary artifact reports pass 1 — the same warmth profile as a
-    // single-pass (driver) invocation, so numbers stay comparable.
-    val results = passes.head
-    val flakyNames = results.collect {
-      case q if (q.runs.nonEmpty && q.runs.size < q.nRuns) ||
-        q.warm.exists(_.secs < 0) => q.name
-    }
-    // Queries with any suspect run, named at top level AND in the stdout
-    // summary: the three-valued #70 decision rule (clean / regression /
-    // burst-suspect) needs the burst-suspect set visible without opening
-    // the per-query block.
-    val suspectNames = results.collect {
-      case q if q.suspect.contains(true) => q.name
-    }
-
-    def fmt(d: Double): String = BigDecimal(d)
-      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-
-    // Full-fidelity per-query artifact: chosen stat, every raw run with its
-    // GC/JIT/longest-task attribution, the task count/sum (uniformity), the
-    // per-run mini-probe readings and suspect flags, the spread, and
-    // (warmed queries) the untimed warmup run — so a reader can audit
-    // whether a chosen number is stable, what the excluded compile run
-    // cost, and WHERE an outlier run's time went (GC pause vs JIT storm vs
-    // one straggler task vs host throttle burst vs genuinely slow plan).
-    val perQuery = results.map { q =>
-      val times = q.runs.map(_.secs)
-      // spread describes the SAME sample the chosen stat came from (clean
-      // runs when any exist): a criterion like "spread <= 1.5" must not
-      // stay formally unmet because one flagged burst run widened it —
-      // the unfiltered sample is fully visible in "runs"/"suspect".
-      val sample = {
-        val clean = q.runs.zip(q.suspect).collect { case (r, false) => r.secs }
-        if (clean.nonEmpty) clean else times
-      }
-      val spread = if (sample.size >= 2) sample.max - sample.min else 0.0
-      val warmField = q.warm.map(w =>
-        s""","warmup":${fmt(w.secs)},"warmup_gc_ms":${w.gcMs},""" +
-          s""""warmup_jit_ms":${w.jitMs}""").getOrElse("")
-      val allField =
-        if (q.secsAll != q.secs) s""","secs_all":${fmt(q.secsAll)}""" else ""
-      s"""  "${q.name}": {"secs":${fmt(q.secs)},"stat":"${q.stat}"$allField,""" +
-        s""""runs":[${times.map(fmt).mkString(",")}],"spread":${fmt(spread)},""" +
-        s""""suspect":[${q.suspect.mkString(",")}],""" +
-        s""""gc_ms":[${q.runs.map(_.gcMs).mkString(",")}],""" +
-        s""""jit_ms":[${q.runs.map(_.jitMs).mkString(",")}],""" +
-        s""""max_task_ms":[${q.runs.map(_.maxTaskMs).mkString(",")}],""" +
-        s""""tasks":[${q.runs.map(_.tasks).mkString(",")}],""" +
-        s""""task_sum_ms":[${q.runs.map(_.taskSumMs).mkString(",")}],""" +
-        s""""probe_ms":[${q.runs.map(r =>
-          s"[${r.probeBeforeMs},${r.probeAfterMs}]").mkString(",")}],""" +
-        s""""mem_ms":[${q.runs.map(r =>
-          s"[${r.memBeforeMs},${r.memAfterMs}]").mkString(",")}]$warmField}"""
-    }.mkString("{\n", ",\n", "\n}")
-    val failedNames = results.collect { case q if q.secs < 0 => q.name }
-    // A failed query must POISON the headline number: excluding it would
-    // make a broken round bench FASTER than a working one for any consumer
-    // that only reads "value".
-    val total =
-      if (failedNames.nonEmpty) -1.0
-      else results.map(_.secs).sum
-
-    // Probe block: every reading (all passes), plus the clean verdict for
-    // PASS 1 — the pass the primary numbers come from. Clean = within-pass
-    // drift ≤ tolerance AND every reading ≤ tolerance × the quiet-host
-    // reference (CpuProbe scaladoc) — so a pass throttled uniformly from
-    // its first query still self-reports dirty.
-    import graft.util.CpuProbe
-    val probeSeq = probes.toSeq
-    val p1 = probeSeq.filter(_.label.startsWith("p1_"))
-    val probeClean = CpuProbe.clean(p1)
-    // The bandwidth-regime verdict (round-14 graduation, round-13 verdict
-    // #1): three-valued over pass 1's mem readings. Load-bearing below —
-    // a non-clean verdict diverts sub-3x gt2x entries to gt2x_regime.
-    val memVerdict = CpuProbe.memVerdict(p1)
-    // Run-level mem summary next to the pass verdict: how many probed
-    // runs saw the bandwidth regime. A pass can read mem-clean at its 3
-    // sample points while an intermittent regime taxes runs in between —
-    // these counts make that visible at the top of the artifact.
-    val memRunReadings = results.flatMap(_.runs)
-      .flatMap(r => Seq(r.memBeforeMs, r.memAfterMs)).filter(_ >= 0)
-    val memRunsHot = memRunReadings.count(CpuProbe.memHot)
-    val probeJson = {
-      val readings = probeSeq.map(r =>
-        s"""{"label":"${r.label}","single_ms":${r.singleMs},""" +
-          s""""wide_ms":${r.wideMs},"mem_ms":${r.memMs}}""")
-        .mkString("[", ",", "]")
-      s"""{"work":${CpuProbe.Work},"threads":${CpuProbe.RefThreads},""" +
-        s""""ref_single_ms":${CpuProbe.RefSingleMs},"ref_wide_ms":${CpuProbe.RefWideMs},""" +
-        s""""tolerance_single":${CpuProbe.ToleranceSingle},""" +
-        s""""tolerance_wide":${CpuProbe.ToleranceWide},""" +
-        s""""ref_mini_ms":${CpuProbe.RefMiniMs},""" +
-        s""""tolerance_mini":${CpuProbe.ToleranceMini},""" +
-        s""""ref_mem_ms":${CpuProbe.RefMemMs},""" +
-        s""""tolerance_mem":${CpuProbe.ToleranceMem},""" +
-        s""""mem_dirty_factor":${CpuProbe.MemDirtyFactor},""" +
-        s""""ref_source":"${CpuProbe.RefSource}","host_cpus":${CpuProbe.HostCpus},""" +
-        s""""clean":$probeClean,"mem":"$memVerdict",""" +
-        s""""mem_run_readings":${memRunReadings.size},""" +
-        s""""mem_runs_hot":$memRunsHot,"readings":$readings}"""
-    }
-
-    // Ratio summary vs the baseline artifact (if one was readable): median
-    // and p90 of per-query cur/base, and the >2x names. Read with the probe
-    // verdict: clean probe + high ratios = regression; dirty probe explains
-    // the ratios away without cross-referencing another machine's numbers.
-    // The >2x list is gated on the suspect flags (round-12 verdict #2: the
-    // r12 driver gt2x named 8 queries, 8-for-8 burst false-positives —
-    // a list that cries wolf on its first outing trains readers to ignore
-    // it): a query whose chosen stat had to include suspect runs goes to
-    // `gt2x_suspect` (the burst is named, not the plan). Round 14 adds the
-    // second regime's gate (round-13 verdict #1: the r13 driver pass named
-    // 7 gt2x "regressions", 7-for-7 bandwidth-contention environmental):
-    // diversion to `gt2x_regime` is decided by [[regimeDivert]]: pass-level
-    // non-clean mem verdict (sub-3x entries only — the uniform regime
-    // can't produce more) OR per-query run-level mem-hot evidence (no
-    // ceiling — see the scaladoc for why). `gt2x` itself lists only
-    // queries slow on a clean sample with no bandwidth evidence — genuine
-    // regressions.
-    val statByName = results.map(q => q.name -> q.stat).toMap
-    val ratios = results.flatMap { q =>
-      baseline.get(q.name).filter(_ > 0.0)
-        .collect { case b if q.secs > 0.0 => (q.name, q.secs / b) }
-    }.sortBy(_._2)
-    val vsBaseline =
-      if (sfMismatch)
-        s"""{"file":"${baselinePath.get}","sf_mismatch":true,""" +
-          s""""baseline_sf":"${baselineSf.get}"}"""
-      else if (ratios.isEmpty) "null"
-      else {
-        val med = ratios(ratios.size / 2)._2
-        val p90 = ratios((ratios.size * 9) / 10 min (ratios.size - 1))._2
-        val (sus2x, rest) = ratios.filter(_._2 > 2.0)
-          .partition { case (n, _) => statByName(n).endsWith("_suspect") }
-        val memHotByName = results.map(q => q.name -> q.runs.exists(r =>
-          CpuProbe.memHot(r.memBeforeMs) ||
-            CpuProbe.memHot(r.memAfterMs))).toMap
-        val (regime2x, gt2x) = rest.partition { case (n, ratio) =>
-          regimeDivert(memVerdict, ratio, memHotByName(n))
-        }
-        s"""{"file":"${baselinePath.get}","n":${ratios.size},""" +
-          s""""median_ratio":${fmt(med)},"p90_ratio":${fmt(p90)},""" +
-          s""""mem_regime":"$memVerdict",""" +
-          s""""gt2x":[${gt2x.map("\"" + _._1 + "\"").mkString(",")}],""" +
-          s""""gt2x_regime":[${regime2x.map("\"" + _._1 + "\"").mkString(",")}],""" +
-          s""""gt2x_suspect":[${sus2x.map("\"" + _._1 + "\"").mkString(",")}]}"""
+      .map { case (name, fn) =>
+        val done = Iterator.fill(1 + TimedRuns)(oneRun(name, fn))
+          .takeWhile(_.isDefined).flatten.toSeq
+        Result(name, done.headOption, done.drop(1))
       }
 
-    val artifact =
-      s"""{
-         |"sf":"$sfDir",
-         |"unit":"sec",
-         |"total":${fmt(total)},
-         |"failed":[${failedNames.map("\"" + _ + "\"").mkString(",")}],
-         |"flaky":[${flakyNames.map("\"" + _ + "\"").mkString(",")}],
-         |"suspect":[${suspectNames.map("\"" + _ + "\"").mkString(",")}],
-         |"probe":$probeJson,
-         |"vs_baseline":$vsBaseline,
-         |"queries":$perQuery
-         |}""".stripMargin
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      artifact.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-    // Stability artifact (repeat >= 2): chosen stat per pass, absolute delta
-    // and worst/best ratio per query — drift is a first-class measurement,
-    // not something reconstructed from two differently-warmed bench files.
-    if (repeat >= 2) {
-      val byName = passes.map(_.map(r => r.name -> r).toMap)
-      val rows = selected.map(_._1).map { name =>
-        val secs = byName.map(_(name).secs)
-        val delta = secs.max - secs.min
-        val ratio =
-          if (secs.exists(_ <= 0)) -1.0
-          else secs.max / secs.min
-        s"""  "$name": {"passes":[${secs.map(fmt).mkString(",")}],""" +
-          s""""delta":${fmt(delta)},"ratio":${fmt(ratio)}}"""
-      }.mkString("{\n", ",\n", "\n}")
-      val totals = passes.map(p => fmt(p.map(_.secs).sum)).mkString(",")
-      val stab =
-        s"""{
-           |"sf":"$sfDir",
-           |"unit":"sec",
-           |"repeat":$repeat,
-           |"totals":[$totals],
-           |"queries":$rows
-           |}""".stripMargin
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_stability.json"),
-        stab.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-
-    // The driver's stdout capture keeps only a bounded TAIL (~2000 chars:
-    // every BENCH_r{1..6}.json has parsed:null because the full 200-query
-    // map is ~5 KB and the line's head scrolled out of the buffer). The
-    // one-line summary therefore carries the queries MOST-EXPENSIVE-FIRST
-    // up to a hard length budget, plus how many cheap ones were elided;
-    // full per-query fidelity lives in the committed artifact file.
-    val failed = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val flaky = flakyNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val suspectJs = suspectNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val lineBudget = 1600
-    val fixedLen =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"omitted":000,"probe_clean":$probeClean,"probe_mem":"$memVerdict","suspect":$suspectJs,"queries":{},"failed":$failed,"flaky":$flaky,"artifact":"$outFile","sf":"$sfDir"}""".length
-    val entries = results
-      .sortBy(q => -q.secs) // failed (-1) sort last
-      .map(q => "\"" + q.name + "\":" + fmt(q.secs))
-    var used = fixedLen
-    val kept = entries.takeWhile { e =>
-      val ok = used + e.length + 1 <= lineBudget
-      if (ok) used += e.length + 1
-      ok
-    }
-    val qs = kept.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"omitted":${results.size - kept.size},"probe_clean":$probeClean,"probe_mem":"$memVerdict","suspect":$suspectJs,"queries":$qs,"failed":$failed,"flaky":$flaky,"artifact":"$outFile","sf":"$sfDir"}""")
+    val vs = baseline.fold("null") { case (p, txt) => vsBaseline(results, sfDir, p, txt) }
+    Files.write(Paths.get(outFile), artifact(results, sfDir, vs).getBytes(UTF_8))
+    println(summaryLine(results, sfDir, outFile))
     spark.stop()
   }
 }

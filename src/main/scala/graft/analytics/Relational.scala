@@ -529,8 +529,7 @@ object Relational {
   def rangeAuto(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.plans.RangeJoinRewrite.install(spark)
-    spark.conf.set(graft.plans.RangeJoinRewrite.BucketWidthConf,
-      sys.env.getOrElse("GRAFT_RANGE_W", "2"))
+    spark.conf.set(graft.plans.RangeJoinRewrite.BucketWidthConf, "2")
     // Aggregation pushdown below the range join: the final aggregate is
     // keyed on the point value itself (d_day ranges over exactly the ship
     // days), and count/sum are distributive — so pre-aggregate the fact to

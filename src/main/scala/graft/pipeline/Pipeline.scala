@@ -152,6 +152,14 @@ object Pipeline {
     //    '{{ ds }}' directory and break the glob on read-back.
     val RawZoneDest(bucket, pathTemplate) = spec.destination
     val root = s"$bucket/${PipelineSpec.renderDs(pathTemplate, ds).stripSuffix("/")}"
+    // Replace, not merge (load_string(replace=True)): drop this date's
+    // previous partition first. Dynamic overwrite alone writes nothing for
+    // a zero-row ingest, so a re-run would leave the earlier run's rows in
+    // place for the checks to read.
+    val partition = s"$root/ds=$ds"
+    val partitionPath = new org.apache.hadoop.fs.Path(partition)
+    partitionPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(partitionPath, true)
     // A zero-COLUMN ingest (e.g. the API returned '[]') cannot be written
     // as parquet and must not crash the run: skip the write and hand the
     // empty frame straight to the checks, so min_row_count FAILS as a
@@ -167,7 +175,7 @@ object Pipeline {
         //    the raw zone, data_quality_operator.py:63-69) with the schema
         //    just written, so no job infers it from parquet footers. A
         //    zero-ROW ingest writes no partition directory: no rows to check.
-        val (partition, schema) = (s"$root/ds=$ds", ingested.drop("ds").schema)
+        val schema = ingested.drop("ds").schema
         (if (DataQuality.pathExists(spark, partition)) spark.read.schema(schema).parquet(partition)
          else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema), true)
       }

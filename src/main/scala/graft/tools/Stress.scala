@@ -14,7 +14,7 @@ import graft.util.Ckpt._
   * was recovered. This is the "would it survive 20–40× the bench corpus"
   * evidence the fixed sf0.1 fixture can't give:
   *
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.Stress 200000"
+  *   SPARK_GRAFT_CPUS=$(nproc) sbt "runMain graft.tools.Stress 200000"
   *
   * Corpus design: docs come in groups of [[GroupSize]]; every member of a
   * group shares the group's token body except one member-specific position.
@@ -1759,7 +1759,8 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 200000L
     val scenario = if (args.length > 1) args(1) else "dedup"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

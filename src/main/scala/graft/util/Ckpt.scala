@@ -30,21 +30,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object Ckpt {
 
-  /** Eager-vs-lazy pin knob for [[CkptOps.ckptDisk]], env-parameterised so
-    * the trade can be measured per environment without a code edit
-    * (round-14 verdict #3 asked for the A/B). Eager (default) blocks the
-    * driver on a dedicated materialization job; lazy materializes inside
-    * the first consuming action. Measured at sf0.1/local[32] on the five
-    * pairs-build queries (BENCH_NOTES #89): eager and lazy are within
-    * noise of each other on every one, and lazy additionally surrenders
-    * the layout repair below (UnknownPartitioning until materialized), so
-    * eager stays the default.
-    */
-  private val Eager: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_CKPT_EAGER", "true").toBoolean
-
   implicit class CkptOps[T](private val ds: Dataset[T]) extends AnyVal {
-    /** Eager localCheckpoint with serialized DISK_ONLY block storage,
+    /** Eager localCheckpoint with serialized DISK_ONLY block storage
+      * (eager and lazy measured within noise of each other on the
+      * pairs-build queries, BENCH_NOTES #89, and lazy would give up the
+      * layout repair below: UnknownPartitioning until materialized),
       * KEEPING the frame's physical layout metadata: under AQE, Spark's
       * own localCheckpoint records UnknownPartitioning (the adaptive plan
       * wrapper hides the final plan's partitioning from
@@ -59,7 +49,7 @@ object Ckpt {
       */
     def ckptDisk(): Dataset[T] =
       org.apache.spark.sql.graft.Bridge.repairCheckpointLayout(
-        ds, ds.localCheckpoint(Eager, StorageLevel.DISK_ONLY))
+        ds, ds.localCheckpoint(eager = true, StorageLevel.DISK_ONLY))
   }
 
   /** Drops a [[CkptOps.ckptDisk]] frame's storage blocks NOW instead of

@@ -82,6 +82,24 @@ class PipelineRunSpec extends SparkSpec {
       CheckResult("required_columns", passed = true, "all present")))
   }
 
+  test("a zero-row rerun of a ds replaces its earlier partition instead of checking stale rows") {
+    import graft.dq._
+    val dir = tmp()
+    val csv = java.nio.file.Paths.get(s"$dir/users.csv")
+    val s = PipelineSpec(PipelineInfo("p0", "o", "@daily", Nil, ""),
+      FileSource("csv", csv.toString, Map("header" -> "true")),
+      RawZoneDest(dir, "raw/users"), Seq(MinRowCount(1)))
+    java.nio.file.Files.writeString(csv, "id,name\n1,Ada\n2,Bob\n3,Eve\n")
+    val first = Pipeline.run(spark, s, LocalDate.parse("2024-05-01"),
+      new StubFetcher(""), new RecordingAlerts)
+    assert(first.passed && first.rows == 3)
+    java.nio.file.Files.writeString(csv, "id,name\n")
+    val r = Pipeline.run(spark, s, LocalDate.parse("2024-05-01"),
+      new StubFetcher(""), new RecordingAlerts)
+    assert(r.rows == 0 && !r.passed)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/raw/users/ds=2024-05-01")))
+  }
+
   test("rerun of the same ds overwrites that partition only") {
     import graft.dq._
     val bucket = tmp()
